@@ -113,20 +113,16 @@ def run_suite_bench(spark, paths) -> dict:
     workers, and the Bloom bits are one-time planning costs that amortize to
     nothing over a long multi-partition run, exactly like on a real cluster.
 
-    The job runs in OVERLAPPED form (``pass2_prune=False`` +
-    ``materialize(parallel=True)``): the bench table fails in every
-    partition, so the failing-partition prune would scan everything anyway —
-    skipping its driver barrier lets pass 1, the table-rule jobs (salted
-    unique, hash-invariant join), and the pass-2 violation scan run as
-    concurrent jobs that fill each other's straggler-wave idle slots. Set
-    ``SWS_BENCH_SEQ=1`` for the serialized form (the per-phase timings then
-    measure each barrier in isolation — the Amdahl breakdown the scaling
-    analysis uses)."""
+    The job runs in the engine's one form: ``validate()`` runs pass 1 and
+    restricts pass 2 to the failing partitions (every partition here), then
+    ``materialize()`` runs the verdict union's table-rule legs (salted
+    unique, hash-invariant join), the pass-2 violation scan and the stats
+    projection as concurrent jobs. ``plan_build`` therefore includes pass
+    1; ``perfbench/run.py --trace 1`` gives per-phase task time."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(paths["docs"]).withColumn("text_len", F.length("text"))
     suite = build_suite(spark, paths)
-    sequential = bool(os.environ.get("SWS_BENCH_SEQ"))
 
     def one_run():
         ph = {}
@@ -137,24 +133,11 @@ def run_suite_bench(spark, paths) -> dict:
             partition_col="warc_day",
             violation_limit=100,
             stats_columns=["url", "warc_ts", "html", "text", "lang"],
-            pass2_prune=sequential,
         )
         ph["plan_build"] = round(time.monotonic() - t0, 3)
-        if sequential:
-            t1 = time.monotonic()
-            verd = res.verdicts.collect()
-            ph["verdicts"] = round(time.monotonic() - t1, 3)
-            t1 = time.monotonic()
-            n_viol = res.violations.count()
-            ph["violations"] = round(time.monotonic() - t1, 3)
-            t1 = time.monotonic()
-            stats = res.stats.collect()
-            ph["stats"] = round(time.monotonic() - t1, 3)
-            out = {"verdicts": verd, "n_violations": n_viol, "stats": stats}
-        else:
-            t1 = time.monotonic()
-            out = res.materialize(parallel=True)
-            ph["materialize_overlapped"] = round(time.monotonic() - t1, 3)
+        t1 = time.monotonic()
+        out = res.materialize()
+        ph["materialize"] = round(time.monotonic() - t1, 3)
         res.unpersist()
         wall = time.monotonic() - t0
         verd = out["verdicts"]
@@ -561,30 +544,6 @@ def scaling_main() -> None:
             runs[n].append(json.loads(line))
             print(f"rep{rep} local[{n}]: {line}")
 
-    # one extra pair in SEQUENTIAL mode (each driver barrier timed in
-    # isolation): the per-phase walls at both levels give the Amdahl
-    # breakdown — which phase stops scaling — that the headline overlapped
-    # runs can't expose. Skipped with SWS_SCALE_NO_PHASES=1.
-    seq_phases: dict[int, dict] = {}
-    if not os.environ.get("SWS_SCALE_NO_PHASES"):
-        for n in pair:
-            env = dict(os.environ)
-            env["SWS_BENCH_MASTER"] = f"local[{n}]"
-            env["SWS_BENCH_SEQ"] = "1"
-            env["SWS_BENCH_SKIP_QUERIES"] = "1"
-            env["SWS_BENCH_SKIP_WARC"] = "1"
-            env.setdefault("SWS_BENCH_ROWS", "8000000")
-            env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-            env.pop("SWS_BENCH_LLM_OPS", None)
-            env.pop("SWS_BENCH_PROBE", None)
-            out = subprocess.run(
-                [sys.executable, os.path.abspath(__file__)],
-                env=env, capture_output=True, text=True, timeout=3600,
-            )
-            line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-            seq_phases[n] = json.loads(line)["suite_phases_warm"]
-            print(f"phase-breakdown local[{n}]: {seq_phases[n]}")
-
     def _median(vals):
         s = sorted(vals)
         return s[len(s) // 2]
@@ -718,28 +677,6 @@ sha ceiling is the hardware's string-churn penalty, not a shuffle defect
             + "\n"
         )
 
-    phase_md = ""
-    if seq_phases:
-        keys = [k for k in seq_phases[lo] if k in seq_phases[hi]]
-        rows_md = []
-        for k in keys:
-            a, b = seq_phases[lo][k], seq_phases[hi][k]
-            e = (a / b) / ratio if b else 0.0
-            rows_md.append(f"| {k} | {a} | {b} | {e:.2f} |")
-        phase_md = (
-            f"\n## Per-phase Amdahl breakdown (one sequential-mode run per level)\n\n"
-            f"Each driver barrier timed in isolation (``SWS_BENCH_SEQ=1``:\n"
-            f"pass-2 prune collect restored, no job overlap), so a phase that\n"
-            f"stops scaling is visible instead of averaged away. The headline\n"
-            f"rows above use the overlapped production form — plan build\n"
-            f"returns lazily and all three materializations run as concurrent\n"
-            f"jobs.\n\n"
-            f"| phase | local[{lo}] (s) | local[{hi}] (s) | efficiency |\n|---|---|---|---|\n"
-            + "\n".join(rows_md)
-            + "\n\n(single unrepeated runs — indicative, not medians; "
-            f"plan_build in sequential mode contains pass 1 + the prune collect)\n"
-        )
-
     # render the full measurement history into BENCH.md itself — the file is
     # regenerated wholesale per run, and the contended-host argument needs
     # every (raw eff, same-session probe) pair visible, not just the latest
@@ -802,7 +739,7 @@ separately and never mixed in one column.)
 
 **Scaling efficiency (warm throughput@{hi} / warm throughput@{lo}) / {ratio:.0f} = {eff:.3f}**
 (target ≥ 0.8; cold-including-planning efficiency: {eff_cold:.3f})
-{probe_note}{rep_note}{llm_table}{phase_md}
+{probe_note}{rep_note}{llm_table}
 ## Why N=2 vs 4N=8, and why normalize to a same-day probe
 
 A pure-CPU probe — `max(sha2(concat(id,'x'),256))` over `range(100M)`,

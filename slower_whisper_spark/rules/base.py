@@ -104,6 +104,20 @@ class TableRule(Rule):
         ...
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Backslashes first: Spark's SQL
+    parser treats \\ as an escape inside string literals by default, so an
+    unescaped value containing one would parse to a different string."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as one backtick-quoted Spark SQL identifier — safe for SQL
+    text and for ``F.col`` alike, whatever dots, backticks or parentheses
+    a column or rule_id carries."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _str(col: Column) -> Column:
     """Null-safe cast-to-string for observed/expected projections."""
     return F.coalesce(col.cast("string"), F.lit("NULL"))

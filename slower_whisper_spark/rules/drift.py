@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.rules.base import TableRule
+from slower_whisper_spark.rules.base import TableRule, sql_ident, sql_str
 
 _EPS = 1e-6
 
@@ -39,15 +39,7 @@ def _expr_or_col(name: str):
 def _sql_ref(name: str) -> str:
     """SQL text for the same reference `_expr_or_col` builds: expressions
     pass through, plain names are backtick-quoted."""
-    return name if "(" in name else "`" + name.replace("`", "``") + "`"
-
-
-def _sql_str(s: str) -> str:
-    # backslashes first: Spark's SQL parser treats \ as an escape inside
-    # string literals by default, so an unescaped category value containing
-    # one would parse to a different literal than the F.lit Column path it
-    # replaced (ADVICE r5 #4)
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+    return name if "(" in name else sql_ident(name)
 
 
 def _dlit(v: float) -> str:
@@ -238,7 +230,7 @@ class Drift(TableRule):
         known = f"CAST({_sql_ref(self.column)} AS STRING)"
         cats = list(b.categories)
         null_idx = cats.index("<NULL>") if "<NULL>" in cats else -1
-        arr = ", ".join(_sql_str(c) for c in cats)
+        arr = ", ".join(sql_str(c) for c in cats)
         # array_position returns 0 (not NULL) when absent → -1 after the
         # shift; coalesce keeps the old Column path's NULL belt-and-braces
         return (
@@ -254,7 +246,7 @@ class Drift(TableRule):
         return [
             F.expr(
                 f"sum(CASE WHEN ({bucket}) = {i} THEN 1 ELSE 0 END) "
-                f"AS `drift__{self.rule_id}__{i}`"
+                f"AS {sql_ident(f'drift__{self.rule_id}__{i}')}"
             )
             for i in self._bucket_ids()
         ]
@@ -283,7 +275,7 @@ class Drift(TableRule):
         w = wide.selectExpr(
             "partition",
             *[
-                f"CAST(`drift__{rid}__{i}` AS DOUBLE) AS __c{k}"
+                f"CAST({sql_ident(f'drift__{rid}__{i}')} AS DOUBLE) AS __c{k}"
                 for k, i in enumerate(ids)
             ],
         )
@@ -320,17 +312,17 @@ class Drift(TableRule):
         small = f"(__tot < {_dlit(float(self.min_rows))})"
         obs_small = (
             "concat('skipped: n=', CAST(CAST(__tot AS BIGINT) AS STRING), "
-            + _sql_str(f" < min_rows={self.min_rows}")
+            + sql_str(f" < min_rows={self.min_rows}")
             + ")"
         )
-        obs_stat = f"concat({_sql_str(self.metric + '=')}, CAST(round(__stat, 6) AS STRING))"
+        obs_stat = f"concat({sql_str(self.metric + '=')}, CAST(round(__stat, 6) AS STRING))"
         return w.selectExpr(
             "partition",
-            f"{_sql_str(rid)} AS rule_id",
+            f"{sql_str(rid)} AS rule_id",
             f"({small} OR (__stat <= {_dlit(self.threshold)})) AS passed",
             "CAST(0 AS BIGINT) AS violations",
             f"CASE WHEN {small} THEN {obs_small} ELSE {obs_stat} END AS observed",
-            f"{_sql_str(f'{self.metric} <= {self.threshold}')} AS expected",
+            f"{sql_str(f'{self.metric} <= {self.threshold}')} AS expected",
         )
 
     def _bucketed(self, df: DataFrame, partition_col: str) -> DataFrame:

@@ -21,7 +21,7 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.rules.base import RowRule, _str
+from slower_whisper_spark.rules.base import RowRule, _str, sql_ident
 
 
 class NotNull(RowRule):
@@ -157,7 +157,7 @@ class TypeCheck(_NullableRowRule):
         }
 
     def predicate(self) -> Column:
-        cast_ok = F.expr(f"try_cast(`{self.column}` AS {self.dtype})").isNotNull()
+        cast_ok = F.expr(f"try_cast({sql_ident(self.column)} AS {self.dtype})").isNotNull()
         return self._wrap(cast_ok)
 
     def expected(self) -> Column:

@@ -8,18 +8,22 @@ sort-keys-JSON sha256 (ref: transcription/schema/registry.py:62-65,104-113);
 rule_hash differs is invalid and forces re-validation
 (ref: transcription/schema/integrity.py:222-335).
 
-Evaluation plan (two scans, both fully declarative):
+Evaluation plan (one form, two scans, both declarative):
 
   pass 1 — one wide ``groupBy(partition).agg(...)``: total row count plus a
-           conditional-sum failure count per row rule. This is the "single
+           conditional-sum failure count per row rule, folded drift
+           histograms and the optional stats profile. This is the "single
            vectorized pass" — Catalyst prunes the scan to exactly the
            columns the rules reference, and whole-stage codegen fuses every
            predicate into the same loop over the Parquet column batches.
-  pass 2 — violation rows, only executed when pass 1 found failures: one
-           scan building an array of failed-rule structs per row →
-           ``explode`` → per-rule ``row_number`` limit. The per-rule limit
-           mirrors the reference's first-N-errors truncation
-           (ref: transcription/transcript_io.py:27-30).
+           The wide row is cached, and ``validate()`` collects its
+           per-partition fail flags once: its only blocking action.
+  pass 2 — violation rows, only over the partitions pass 1 saw fail, so a
+           clean table runs no pass 2 at all and, on a hive/Iceberg layout,
+           the partition filter becomes file-level pruning. One scan builds
+           an array of failed-rule structs per row → ``explode`` → per-rule
+           ``row_number`` limit. The per-rule limit mirrors the reference's
+           first-N-errors truncation (ref: transcription/transcript_io.py:27-30).
 
 Table rules (unique / fk / hash-invariant / drift) contribute their own jobs
 and are unioned into the same verdict/violation shapes
@@ -35,8 +39,8 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from slower_whisper_spark.functions.hashing import canonical_hash, spec_hash
-from slower_whisper_spark.rules.base import RowRule, Rule, TableRule
+from slower_whisper_spark.functions.hashing import spec_hash
+from slower_whisper_spark.rules.base import RowRule, Rule, TableRule, sql_ident, sql_str
 
 VERDICT_COLS = ["partition", "rule_id", "passed", "rows", "violations", "observed", "expected"]
 VIOLATION_COLS = ["key", "rule_id", "observed", "expected"]
@@ -63,32 +67,30 @@ class SuiteResult:
             except Exception:  # pragma: no cover - session already stopped
                 pass
 
-    def materialize(self, parallel: bool = True) -> dict[str, Any]:
+    def materialize(self) -> dict[str, Any]:
         """Run all three result actions and return
         ``{"verdicts": rows, "n_violations": int, "stats": rows | None}``.
 
-        ``parallel=True`` submits them from separate threads so Spark
-        schedules the three jobs concurrently: the verdict union's
-        independent legs (pass-1 agg, unique, hash-invariant), the pass-2
-        violation scan, and the stats projection fill each other's
-        scheduling gaps and straggler-wave idle slots instead of running as
-        three serialized driver barriers. Shared subtrees are safe: the
-        pass-1 ``wide`` row is cached and Spark's block store computes a
-        cached partition once, blocking concurrent requesters on the same
-        block. On a driver with SparkContext FIFO scheduling the jobs still
-        interleave at stage granularity — exactly what a long-running 100-TB
-        driver does with async actions."""
-        if not parallel:
-            verd = self.verdicts.collect()
-            n_viol = self.violations.count()
-            stats = self.stats.collect() if self.stats is not None else None
-            return {"verdicts": verd, "n_violations": n_viol, "stats": stats}
+        The actions are submitted from separate threads so Spark schedules
+        the three jobs concurrently: the verdict union's independent legs
+        (unique, hash-invariant), the pass-2 violation scan, and the stats
+        projection fill each other's scheduling gaps and straggler-wave idle
+        slots instead of running as three serialized driver barriers. Shared
+        subtrees are safe: the pass-1 ``wide`` row is cached and Spark's
+        block store computes a cached partition once, blocking concurrent
+        requesters on the same block. Each thread inherits the caller's
+        local properties and job tags, so its jobs stay in the caller's job
+        group and scheduler pool."""
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        # captures the caller's local properties and tags once, here
+        inherit = inheritable_thread_target(self.verdicts.sparkSession)
         with ThreadPoolExecutor(max_workers=3) as ex:
-            fv = ex.submit(self.verdicts.collect)
-            fn = ex.submit(self.violations.count)
-            fs = ex.submit(self.stats.collect) if self.stats is not None else None
+            fv = ex.submit(inherit(self.verdicts.collect))
+            fn = ex.submit(inherit(self.violations.count))
+            fs = ex.submit(inherit(self.stats.collect)) if self.stats is not None else None
             return {
                 "verdicts": fv.result(),
                 "n_violations": fn.result(),
@@ -162,26 +164,18 @@ class ConstraintSuite:
         key_col: str = "url",
         partition_col: str | None = None,
         violation_limit: int = 100,
-        always_collect_violations: bool = False,
         stats_columns: list[str] | None = None,
         global_df: DataFrame | None = None,
-        pass2_prune: bool = True,
     ) -> SuiteResult:
         """Evaluate the suite.
 
-        ``pass2_prune`` (default True): collect pass-1's failing-partition
-        set eagerly and restrict the pass-2 violation scan to it — on a
-        hive/Iceberg layout that isin literal becomes FILE-level partition
-        pruning, so a mostly-clean 10^12-row table pays pass 2 only for its
-        bad partitions. The collect is also validate()'s only blocking
-        action: with ``pass2_prune=False`` the method returns a fully LAZY
-        result (pass 2 scans every partition of ``df``; identical rows —
-        the two-level limit bounds output regardless), which lets
-        ``SuiteResult.materialize(parallel=True)`` overlap pass 1, the
-        table-rule jobs, and pass 2 as concurrent jobs. Choose by violation
-        geometry: sparse violations → prune (skip the data); violations
-        everywhere (dense-failure benches, ingest quarantines) → False
-        (skip the barrier).
+        When the suite has row rules (or Bloom ``ForeignKey`` rules folded
+        into the row family), this runs pass 1 eagerly: one collect of the
+        cached wide row's per-partition fail flags decides pass 2. A clean
+        table gets no pass 2; with ``partition_col`` set, pass 2 scans only
+        the partitions that failed, so a mostly-clean 10^12-row table pays
+        for its bad partitions alone. Everything else stays lazy until the
+        result is collected or ``SuiteResult.materialize()`` runs it.
 
         ``stats_columns``: fold a column-stats profile into the pass-1 scan
         (count/null-rate/min/max/mean/stddev/quantiles/HLL) — the result
@@ -248,12 +242,13 @@ class ConstraintSuite:
 
         counted_ids = [r.rule_id for r in row_rules] + [r.rule_id for r in folded_fk]
         if counted_ids:
+            viol_cols = [sql_ident(f"viol__{rid}") for rid in counted_ids]
             stacked = wide.select(
                 "partition",
                 "rows",
                 F.expr(
                     f"stack({len(counted_ids)}, "
-                    + ", ".join(f"'{_sql_quote(rid)}', `viol__{rid}`" for rid in counted_ids)
+                    + ", ".join(f"{sql_str(rid)}, {c}" for rid, c in zip(counted_ids, viol_cols))
                     + ") as (rule_id, violations)"
                 ),
             )
@@ -273,25 +268,14 @@ class ConstraintSuite:
             #      the isin filter becomes file-level partition pruning, so a
             #      mostly-clean 10^12-row table pays pass 2 only for its bad
             #      partitions; ref first-N-errors: transcript_io.py:27-30) --- #
-            any_fail = reduce(
-                lambda a, b: a | b, [F.col(f"viol__{rid}") > 0 for rid in counted_ids]
-            )
-            if pass2_prune and not always_collect_violations:
-                # ONE collect decides the prune AND yields the partition
-                # total (a second wide.count() job would be pure overhead)
-                flags = wide.select("partition", any_fail.alias("__fail")).collect()
-                failing_parts = [r["partition"] for r in flags if r["__fail"]]
-                n_parts_total = len(flags)
-            else:
-                failing_parts, n_parts_total = None, None
-            if failing_parts or failing_parts is None or always_collect_violations:
+            any_fail = reduce(lambda a, b: a | b, [F.col(c) > 0 for c in viol_cols])
+            # ONE collect decides pass 2 AND yields the partition total (a
+            # second wide.count() job would be pure overhead)
+            flags = wide.select("partition", any_fail.alias("__fail")).collect()
+            failing_parts = [r["partition"] for r in flags if r["__fail"]]
+            if failing_parts:
                 scan = df
-                if (
-                    partition_col is not None
-                    and failing_parts
-                    and len(failing_parts) < n_parts_total
-                    and not always_collect_violations
-                ):
+                if partition_col is not None and len(failing_parts) < len(flags):
                     scan = df.filter(F.col(pcol).cast("string").isin(failing_parts))
                 structs = F.array(
                     *(
@@ -413,10 +397,6 @@ class ConstraintSuite:
             stats=stats_df,
             persisted=persisted,
         )
-
-
-def _sql_quote(s: str) -> str:
-    return s.replace("'", "''")
 
 
 def _empty_verdicts(spark) -> DataFrame:

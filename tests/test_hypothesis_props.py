@@ -6,7 +6,7 @@ examples cheaply."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from slower_whisper_spark.functions.kll import KLLSketch
@@ -175,3 +175,40 @@ def test_robots_parser_total_on_arbitrary_text(body):
         assert agent == agent.lower()
         assert kind in ("allow", "disallow")
         assert prefix != ""
+
+
+# --------------------------------------------------------------------- #
+# rule_id text reaches SQL literals and column identifiers
+# --------------------------------------------------------------------- #
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(rule_id=st.text(alphabet=st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=20))
+@example(rule_id="a`b.c\\")
+@example(rule_id="it's\\'")
+@example(rule_id="not_null(meta.lang)")
+@example(rule_id="ü.ß`")
+def test_validate_total_on_arbitrary_rule_ids(spark, rule_id):
+    """Any rule_id — backticks, backslashes, quotes, dots, unicode — yields
+    verdict and violation rows carrying exactly that id and the right
+    counts, for a row rule and a folded drift rule alike."""
+    from slower_whisper_spark import ConstraintSuite, NotNull
+    from slower_whisper_spark.rules.drift import Baseline, Drift
+
+    df = spark.createDataFrame(
+        [("a", "x", 0.5), ("b", None, 1.5), ("c", None, 2.5)], "k string, v string, n double"
+    )
+    base = Baseline(column="n", kind="hist", counts=[0, 1, 1, 1, 0], lo=0.0, hi=3.0, n_buckets=3)
+    drift_id = rule_id + "|drift"
+    res = ConstraintSuite(
+        "ids",
+        [
+            NotNull("v", rule_id=rule_id),
+            Drift("n", base, threshold=10.0, min_rows=1, rule_id=drift_id),
+        ],
+    ).validate(df, key_col="k")
+    got = {r["rule_id"]: r["violations"] for r in res.verdicts.collect()}
+    assert got == {rule_id: 2, drift_id: 0}
+    assert sorted((r["key"], r["rule_id"]) for r in res.violations.collect()) == [
+        ("b", rule_id),
+        ("c", rule_id),
+    ]
+    res.unpersist()

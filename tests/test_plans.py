@@ -84,6 +84,36 @@ def test_partition_pruning_on_day_filter(docs_parquet):
     assert "PartitionFilters" in s and "warc_day" in s.split("PartitionFilters", 1)[1][:200]
 
 
+def test_pass2_scans_only_failing_partitions(spark, tmp_path):
+    """Pass 2 reads only the partitions pass 1 saw fail: on a day-partitioned
+    parquet table with one bad day, the violations scan carries a partition
+    filter naming that day alone; on a clean table it reads no file."""
+    import re
+
+    from slower_whisper_spark.plans import explain_str
+
+    rows = [(f"u{d}{i}", "en", f"d{d}") for d in range(1, 4) for i in range(5)]
+    rows[7] = ("u27", None, "d2")
+    path = str(tmp_path / "days")
+    spark.createDataFrame(rows, "url string, lang string, day string").write.partitionBy(
+        "day"
+    ).parquet(path)
+    df = spark.read.parquet(path)
+    suite = ConstraintSuite("p2", [NotNull("lang")])
+
+    res = suite.validate(df, key_col="url", partition_col="day")
+    assert [(r["key"], r["rule_id"]) for r in res.violations.collect()] == [("u27", "not_null(lang)")]
+    plan = explain_str(res.violations)
+    pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert pfs and all("d2" in pf and "d1" not in pf and "d3" not in pf for pf in pfs), plan[:3000]
+
+    clean = suite.validate(df.filter(F.col("lang").isNotNull()), key_col="url", partition_col="day")
+    assert clean.violations.count() == 0
+    assert "FileScan" not in explain_str(clean.violations)
+    res.unpersist()
+    clean.unpersist()
+
+
 def test_revenue_forecast_pushdown(spark):
     """Q6-style query: every filter must reach the parquet scan and the scan
     must be pruned to the referenced columns."""

@@ -192,33 +192,51 @@ def test_vectorized_rule_batch_escape_hatch(spark):
     assert res2.verdicts.collect()[0]["violations"] == 0
 
 
-def test_overlapped_materialize_matches_sequential(docs_small):
-    """The scaling-path form — validate(pass2_prune=False) returning fully
-    lazy + materialize(parallel=True) running verdicts/violations/stats as
-    concurrent jobs — must produce exactly the rows of the default pruned
-    sequential path (same verdicts, same violation set, same stats)."""
+def test_materialize_matches_individual_actions(docs_small):
+    """materialize() runs the three result actions as concurrent jobs; it
+    must return exactly what the same actions return one by one."""
     docs, _, _ = docs_small
-    suite = _std_suite()
-
-    seq = suite.validate(
+    res = _std_suite().validate(
         docs, key_col="url", partition_col="warc_day", violation_limit=1000,
         stats_columns=["url", "lang"],
     )
-    seq_out = seq.materialize(parallel=False)
-
-    par = suite.validate(
-        docs, key_col="url", partition_col="warc_day", violation_limit=1000,
-        stats_columns=["url", "lang"], pass2_prune=False,
-    )
-    par_out = par.materialize(parallel=True)
+    out = res.materialize()
 
     def vset(rows):
         return {tuple(r) for r in rows}
 
-    assert vset(par_out["verdicts"]) == vset(seq_out["verdicts"])
-    assert par_out["n_violations"] == seq_out["n_violations"] > 0
-    assert vset(par_out["stats"]) == vset(seq_out["stats"])
-    # violation ROW sets equal too (limit high enough to be inert here)
-    assert vset(par.violations.collect()) == vset(seq.violations.collect())
-    seq.unpersist()
-    par.unpersist()
+    assert vset(out["verdicts"]) == vset(res.verdicts.collect())
+    assert out["n_violations"] == res.violations.count() > 0
+    assert vset(out["stats"]) == vset(res.stats.collect())
+    res.unpersist()
+
+
+def test_materialize_keeps_caller_job_group(docs_small, spark):
+    """Jobs submitted from materialize()'s worker threads stay in the
+    caller's job group, so the caller can find, trace or cancel them."""
+    docs, _, _ = docs_small
+    res = _std_suite().validate(
+        docs, key_col="url", partition_col="warc_day", stats_columns=["lang"]
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("sws-materialize-group", "materialize job group test")
+    try:
+        res.materialize()
+    finally:
+        sc._jsc.clearJobGroup()
+        res.unpersist()
+    # verdicts.collect, violations.count and stats.collect: >= 1 job each
+    assert len(sc.statusTracker().getJobIdsForGroup("sws-materialize-group")) >= 3
+
+
+def test_default_rule_id_of_nested_column(spark):
+    """NotNull("meta.lang") gets the default id ``not_null(meta.lang)``;
+    the dot in that id must not be read as struct access when the suite
+    references its fail-count column."""
+    df = spark.createDataFrame(
+        [("a", ("en",)), ("b", (None,)), ("c", (None,))], "k string, meta struct<lang: string>"
+    )
+    res = ConstraintSuite("nested", [NotNull("meta.lang")]).validate(df, key_col="k")
+    got = [(r["rule_id"], r["violations"]) for r in res.verdicts.collect()]
+    assert got == [("not_null(meta.lang)", 2)]
+    assert sorted(r["key"] for r in res.violations.collect()) == ["b", "c"]
