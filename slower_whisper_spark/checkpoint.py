@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -81,10 +82,28 @@ class ManifestEntry:
         return ManifestEntry(**{**d, "sketches": d.get("sketches", {})})
 
 
+def local_manifest_path(path: str) -> str:
+    """``path`` as a local (or shared-filesystem) directory. A ``file://``
+    prefix is stripped; any other URI scheme raises ``ValueError``, because
+    manifest I/O is plain local file access — ``os.makedirs("s3://b/m")``
+    would silently create a local ``s3:/b/m`` directory on whichever host
+    runs the driver, and resume would then depend on that host."""
+    m = re.match(r"([A-Za-z][A-Za-z0-9+.-]*)://", path)
+    if m is None:
+        return path
+    if m.group(1).lower() == "file":
+        return path[m.end():]
+    raise ValueError(
+        f"manifest path {path!r}: {m.group(1)}:// is not supported — the checkpoint "
+        "manifest is read and written with local file I/O; use a local or "
+        "shared-filesystem (NFS, fuse-mounted) path, optionally as file://"
+    )
+
+
 class CheckpointManifest:
     def __init__(self, path: str):
-        self.path = path
-        os.makedirs(path, exist_ok=True)
+        self.path = local_manifest_path(path)
+        os.makedirs(self.path, exist_ok=True)
 
     def _files(self) -> list[str]:
         return sorted(

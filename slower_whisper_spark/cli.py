@@ -111,6 +111,13 @@ def main(argv: list[str] | None = None) -> int:
         p.error("--sketch-col requires --manifest (sketches persist into the checkpoint manifest)")
     if args.cmd == "validate" and args.drift_col and not args.manifest:
         p.error("--drift-col requires --manifest (the baseline merges from the manifest's sketches)")
+    if args.cmd == "validate" and args.manifest:
+        from slower_whisper_spark.checkpoint import local_manifest_path
+
+        try:
+            local_manifest_path(args.manifest)
+        except ValueError as e:
+            p.error(str(e))
 
     if args.cmd == "registry":
         return _registry_main(args)

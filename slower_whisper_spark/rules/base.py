@@ -63,11 +63,7 @@ class RowRule(Rule):
         """String Column: what the rule wanted (for the violation row)."""
 
     def fail_count_expr(self) -> Column:
-        """Aggregate expression counting failing rows — used in the single
-        wide agg of pass 1."""
-        return F.sum(F.when(~self.predicate(), F.lit(1)).otherwise(F.lit(0))).alias(
-            f"viol__{self.rule_id}"
-        )
+        return fail_count(self.rule_id, self.predicate())
 
 
 class TableRule(Rule):
@@ -102,6 +98,12 @@ class TableRule(Rule):
         persisted: list[DataFrame] | None = None,
     ) -> tuple[DataFrame, DataFrame | None]:
         ...
+
+
+def fail_count(rule_id: str, predicate: Column) -> Column:
+    """Aggregate counting the rows where ``predicate`` is false, named
+    ``viol__<rule_id>`` — one per row-family rule in the wide agg of pass 1."""
+    return F.sum(F.when(~predicate, F.lit(1)).otherwise(F.lit(0))).alias(f"viol__{rule_id}")
 
 
 def sql_str(s: str) -> str:

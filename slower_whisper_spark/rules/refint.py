@@ -150,25 +150,18 @@ class ForeignKey(TableRule):
         return F.lit(f"member of dim.{self.dim_col}")
 
     def _violating_rows(self, df: DataFrame, key_col: str, partition_col: str) -> DataFrame:
-        fk = F.expr(self.fk_expr)
-        fact = df.select(
+        cols = [
             F.col(partition_col).cast("string").alias("__part"),
             F.col(key_col).cast("string").alias("__key"),
-            fk.alias("__fk"),
-        )
+            F.expr(self.fk_expr).alias("__fk"),
+        ]
+        if self.mode == "bloom":
+            return df.filter(~self.row_predicate(df)).select(*cols)
+        fact = df.select(*cols)
         if self.allow_null:
             fact = fact.filter(F.col("__fk").isNotNull())
-
-        if self.mode == "bloom":
-            return self._bloom_filter_misses(fact)
-
         dim = self.dim_df.select(F.col(self.dim_col).alias("__fk")).distinct()
         return fact.join(F.broadcast(dim), "__fk", "left_anti")
-
-    def _bloom_filter_misses(self, fact: DataFrame) -> DataFrame:
-        might_contain = self._build_bloom_udf(fact.sparkSession)
-        hashed = fact.withColumn("__h", F.xxhash64(F.col("__fk")))
-        return hashed.filter(~might_contain(F.col("__h"))).drop("__h")
 
     def evaluate(
         self,

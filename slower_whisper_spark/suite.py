@@ -25,8 +25,10 @@ Evaluation plan (one form, two scans, both declarative):
            ``row_number`` limit. The per-rule limit mirrors the reference's
            first-N-errors truncation (ref: transcription/transcript_io.py:27-30).
 
-Table rules (unique / fk / hash-invariant / drift) contribute their own jobs
-and are unioned into the same verdict/violation shapes
+Bloom ``ForeignKey`` rules join the row family in both passes, and drift
+bucket counts ride in pass 1. The other table rules (unique / broadcast fk /
+hash-invariant) contribute their own jobs and are unioned into the same
+verdict/violation shapes
 (ref violation-row shape: transcription/schema/validator.py:128-136).
 """
 
@@ -40,7 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from slower_whisper_spark.functions.hashing import spec_hash
-from slower_whisper_spark.rules.base import RowRule, Rule, TableRule, sql_ident, sql_str
+from slower_whisper_spark.rules.base import RowRule, Rule, TableRule, fail_count, sql_ident, sql_str
 
 VERDICT_COLS = ["partition", "rule_id", "passed", "rows", "violations", "observed", "expected"]
 VIOLATION_COLS = ["key", "rule_id", "observed", "expected"]
@@ -201,7 +203,6 @@ class ConstraintSuite:
         persisted: list[DataFrame] = []
 
         # ---- classify rules: row / folded-into-scan / standalone -------- #
-        row_rules: list = list(self.row_rules)
         folded_fk: list = []
         folded_drift: list = []
         standalone: list = []
@@ -213,19 +214,21 @@ class ConstraintSuite:
             else:
                 standalone.append(rule)
 
-        # bloom-FK rules compile to per-row predicates (pandas-UDF membership
-        # tests) and join the row-rule family for BOTH passes
-        fk_compiled = [(rule, rule.row_predicate(df)) for rule in folded_fk]
+        # the row family — (rule_id, predicate, observed, expected), built
+        # once for both passes. Bloom-FK rules compile to per-row predicates
+        # (pandas-UDF membership tests) and join it.
+        row_family = [(r.rule_id, r.predicate(), r.observed(), r.expected()) for r in self.row_rules]
+        row_family += [
+            (r.rule_id, r.row_predicate(df), r.fold_observed(), r.fold_expected()) for r in folded_fk
+        ]
 
         # ---- pass 1: ONE wide agg — rule fail counts + drift histograms
         #      + column stats, all in a single scan ----------------------- #
         agg_exprs = [F.count(F.lit(1)).alias("rows")]
-        agg_exprs += [r.fail_count_expr() for r in row_rules]
-        agg_exprs += [
-            F.sum(F.when(~pred, F.lit(1)).otherwise(F.lit(0))).alias(f"viol__{rule.rule_id}")
-            for rule, pred in fk_compiled
-        ]
+        agg_exprs += [fail_count(rid, pred) for rid, pred, _, _ in row_family]
+        scan1 = df
         for rule in folded_drift:
+            scan1 = rule.with_bucket(scan1)
             agg_exprs += rule.fold_agg_exprs()
 
         stat_profiles = None
@@ -235,12 +238,12 @@ class ConstraintSuite:
             stat_profiles = _profiles_for(df, stats_columns)
             agg_exprs += stat_agg_exprs(df, stat_profiles)
 
-        wide = df.groupBy(F.col(pcol).cast("string").alias("partition")).agg(*agg_exprs)
+        wide = scan1.groupBy(F.col(pcol).cast("string").alias("partition")).agg(*agg_exprs)
         wide = wide.cache()
         persisted.append(wide)
         part_rows = wide.select("partition", "rows")
 
-        counted_ids = [r.rule_id for r in row_rules] + [r.rule_id for r in folded_fk]
+        counted_ids = [rid for rid, _, _, _ in row_family]
         if counted_ids:
             viol_cols = [sql_ident(f"viol__{rid}") for rid in counted_ids]
             stacked = wide.select(
@@ -278,26 +281,15 @@ class ConstraintSuite:
                 if partition_col is not None and len(failing_parts) < len(flags):
                     scan = df.filter(F.col(pcol).cast("string").isin(failing_parts))
                 structs = F.array(
-                    *(
-                        [
-                            F.struct(
-                                F.lit(r.rule_id).alias("rule_id"),
-                                r.observed().alias("observed"),
-                                r.expected().alias("expected"),
-                                r.predicate().alias("ok"),
-                            )
-                            for r in row_rules
-                        ]
-                        + [
-                            F.struct(
-                                F.lit(rule.rule_id).alias("rule_id"),
-                                rule.fold_observed().alias("observed"),
-                                rule.fold_expected().alias("expected"),
-                                pred.alias("ok"),
-                            )
-                            for rule, pred in fk_compiled
-                        ]
-                    )
+                    *[
+                        F.struct(
+                            F.lit(rid).alias("rule_id"),
+                            obs.alias("observed"),
+                            exp.alias("expected"),
+                            pred.alias("ok"),
+                        )
+                        for rid, pred, obs, exp in row_family
+                    ]
                 )
                 failed = F.filter(structs, lambda s: ~s["ok"])
                 exploded = (

@@ -46,6 +46,32 @@ def test_manifest_roundtrip(tmp_path):
     assert m.completed_partitions("OTHER") == set()
 
 
+def test_manifest_rejects_non_local_uri(tmp_path, monkeypatch, capsys):
+    """A non-local manifest URI is a clear early error — never a local
+    ``s3:/...`` directory on whichever host runs the driver; a ``file://``
+    URI is the local path it names."""
+    import json
+
+    import pytest
+
+    from slower_whisper_spark.cli import main
+
+    monkeypatch.chdir(tmp_path)
+    suite_path = tmp_path / "suite.json"
+    suite_path.write_text(json.dumps(_suite().spec()))
+    (tmp_path / "table").mkdir()
+    with pytest.raises(SystemExit) as e:
+        main(["validate", str(tmp_path / "table"), "--suite", str(suite_path), "--manifest", "s3://bucket/m"])
+    assert e.value.code == 2
+    assert "s3:// is not supported" in capsys.readouterr().err
+    with pytest.raises(ValueError, match="s3:// is not supported"):
+        CheckpointManifest("s3://bucket/m")
+    assert not (tmp_path / "s3:").exists()
+
+    m = CheckpointManifest(f"file://{tmp_path}/fm")
+    assert m.path == f"{tmp_path}/fm" and (tmp_path / "fm").is_dir()
+
+
 def test_latest_entry_wins(tmp_path):
     m = CheckpointManifest(str(tmp_path / "m"))
     e1 = ManifestEntry("p1", "s", "spec", "h", "success", {}, "t1", "r1")
